@@ -23,7 +23,10 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from industrial_data_pipeline_spark.catalog.store import ParquetStore
-from industrial_data_pipeline_spark.functions.formula import validate
+from industrial_data_pipeline_spark.functions.formula import (
+    dependency_order,
+    validate,
+)
 from industrial_data_pipeline_spark.operators.closure import hierarchy_paths
 from industrial_data_pipeline_spark.operators.derived import backfill_derived
 from industrial_data_pipeline_spark.operators.export import (
@@ -226,9 +229,12 @@ class Pipeline:
             raise ValueError(
                 f"attribute {attribute_id} is not a derived attribute")
         if formula is not None:
-            known = {r[0] for r in attr.select("attribute_id").collect()
-                     if r[0] != attribute_id}
-            validate(formula, known)
+            catalog = attr.select("attribute_id", "formula").collect()
+            validate(formula, {r[0] for r in catalog if r[0] != attribute_id})
+            # an indirect cycle (B reads A, A updated to read B) has no
+            # maintenance order; refuse it before any write
+            dependency_order({r[0]: r[1] for r in catalog
+                              if r[1] is not None} | {attribute_id: formula})
         updated = attr.select(
             "element_id", "attribute_id",
             F.when(F.col("attribute_id") == attribute_id,

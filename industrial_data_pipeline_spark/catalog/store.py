@@ -72,6 +72,24 @@ def _locked(method):
     return wrapper
 
 
+def merge_archive(old: DataFrame, new: DataFrame, mode: str) -> DataFrame:
+    """Archive-shaped rows of ``old`` and ``new`` merged on
+    (attribute_id, timestamp): mode="first_wins" keeps the ``old`` row,
+    mode="last_wins" the ``new`` one.
+
+    Precedence via a source rank instead of a window sort over
+    everything: groupBy + min_by/max_by is a single partial-aggable
+    shuffle on the merge key. The ordering struct is the rank THEN
+    the value — duplicate keys within one side would otherwise tie on
+    the rank and pick a partition-order-dependent winner."""
+    assert mode in ("first_wins", "last_wins")
+    pick = F.min_by if mode == "first_wins" else F.max_by
+    return (old.withColumn("_src", F.lit(0))
+            .unionByName(new.withColumn("_src", F.lit(1)))
+            .groupBy("attribute_id", "timestamp")
+            .agg(pick("value", F.struct("_src", "value")).alias("value")))
+
+
 #: process-global per-(root, database) lock state, shared by every
 #: ParquetStore instance in the process — the single-writer contract
 #: is per PROCESS, so two instances over the same root must share one
@@ -466,7 +484,7 @@ class ParquetStore:
 
     @_locked
     def upsert_archive(self, database: str, df: DataFrame,
-                       mode: str = "first_wins") -> DataFrame | None:
+                       mode: str = "first_wins") -> None:
         """Partition-scoped merge on (attribute_id, timestamp).
 
         mode="first_wins"  — existing rows win (reference backfill
@@ -477,63 +495,29 @@ class ParquetStore:
         Only the date partitions present in ``df`` are read and
         rewritten (dynamic partition overwrite), so cost scales with
         the batch's date span, not with history size.
-
-        Returns the MATERIALIZED merged frame — by construction the
-        exact post-write content of the affected date partitions
-        (optimization r15): a caller that immediately needs those
-        partitions back (derived maintenance's sibling lookup) can
-        read the local blocks instead of re-listing and re-scanning
-        the files this call just wrote. Returns None when the batch
-        was empty (nothing written).
         """
-        assert mode in ("first_wins", "last_wins")
         path = self._path(database, "archive")
         # one evaluation of the caller's plan: the dates collect AND
-        # the merge both read it, and for derived maintenance that
-        # plan is a pivot+join worth not recomputing
-        incoming = self._with_partition(
-            df.select("attribute_id", "timestamp", "value")
-        ).localCheckpoint(eager=True)
+        # the merge both read it
+        incoming = df.select("attribute_id", "timestamp", "value") \
+            .localCheckpoint(eager=True)
         # affected partitions: tiny driver-side list (dates in the batch)
-        dates = [r[0] for r in
-                 incoming.select(ARCHIVE_PARTITION_COL).distinct().collect()]
+        dates = [r[0] for r in incoming.select(F.to_date("timestamp"))
+                 .distinct().collect()]
         if not dates:
-            return None
-        existing = (
-            self.archive(database)
-            .where(F.col(ARCHIVE_PARTITION_COL).isin(dates))
-        )
-        # precedence via a source rank instead of a window sort over
-        # everything: groupBy + min_by/max_by is a single partial-aggable
-        # shuffle on the merge key.
-        old = existing.withColumn("_src", F.lit(0))
-        new = incoming.withColumn("_src", F.lit(1))
-        unioned = old.unionByName(new)
-        pick = F.min_by if mode == "first_wins" else F.max_by
-        # ordering struct: _src (old-vs-new precedence) THEN value —
-        # duplicate keys WITHIN one batch would otherwise tie on _src
-        # and pick a partition-order-dependent winner
-        merged = (
-            unioned.groupBy("attribute_id", "timestamp")
-            .agg(
-                pick(F.struct("value", ARCHIVE_PARTITION_COL),
-                     F.struct(F.col("_src"), F.col("value")))
-                .alias("_row"))
-            .select("attribute_id", "timestamp",
-                    F.col("_row.value").alias("value"),
-                    F.col(f"_row.{ARCHIVE_PARTITION_COL}")
-                    .alias(ARCHIVE_PARTITION_COL))
-        )
+            return
+        existing = self.archive(database) \
+            .where(F.col(ARCHIVE_PARTITION_COL).isin(dates)) \
+            .select("attribute_id", "timestamp", "value")
         # materialize before the overwrite: the merged plan reads the
         # same partitions it is about to replace. Bounded by the
         # batch's affected partitions, not history size.
-        merged = merged.localCheckpoint(eager=True)
-        with self._dynamic_overwrite():
-            self._clustered(merged) \
-                .write.mode("overwrite").partitionBy(
-                    ARCHIVE_PARTITION_COL
-                ).parquet(path)
-        return merged
+        merged = self._with_partition(
+            merge_archive(existing, incoming, mode)
+        ).localCheckpoint(eager=True)
+        self._clustered(merged).write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
+            .partitionBy(ARCHIVE_PARTITION_COL).parquet(path)
 
     @_locked
     def rewrite_archive(self, database: str, df: DataFrame) -> None:
@@ -545,16 +529,3 @@ class ParquetStore:
         )).write.partitionBy(ARCHIVE_PARTITION_COL).parquet(tmp)
         shutil.rmtree(path)
         os.rename(tmp, path)
-
-    def _dynamic_overwrite(self):
-        spark, key = self.spark, "spark.sql.sources.partitionOverwriteMode"
-
-        class _Ctx:
-            def __enter__(self_inner):
-                self_inner.prev = spark.conf.get(key, "static")
-                spark.conf.set(key, "dynamic")
-
-            def __exit__(self_inner, *exc):
-                spark.conf.set(key, self_inner.prev)
-
-        return _Ctx()

@@ -171,6 +171,25 @@ def validate(formula: str, known_ids: set[int] | None = None) -> list[int]:
     return ids
 
 
+def dependency_order(formulas: dict[int, str]) -> list[int]:
+    """Derived ids ordered so each comes after every derived id its
+    formula reads: each round appends, in the mapping's order, every
+    id whose derived sources are all placed. A cycle (a self-reference
+    included) raises."""
+    deps = {d: set(referenced_ids(f)) & formulas.keys()
+            for d, f in formulas.items()}
+    order: list[int] = []
+    while len(order) < len(deps):
+        done = set(order)
+        ready = [d for d, ds in deps.items() if d not in done and ds <= done]
+        if not ready:
+            raise FormulaError(
+                "Derived formulas form a cycle among attribute ids "
+                f"{sorted(deps.keys() - done)}")
+        order += ready
+    return order
+
+
 def emit_sql(formula: str, col_for_id: Callable[[int], str],
              null_safe_div: bool = True) -> str:
     """Emit ANSI SQL (valid in both Spark SQL and DuckDB).

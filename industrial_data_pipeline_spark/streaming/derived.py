@@ -5,25 +5,27 @@ trigger per derived attribute (/root/reference/database/
 database.py:644-743): on every source-row insert it looks up all
 sibling source values at the same timestamp and, if all are present,
 upserts ``formula(values)`` for the derived id (ON CONFLICT DO UPDATE
-— last-wins).
+— last-wins). The derived row's own insert fires the triggers of the
+attributes derived from it in turn.
 
 Spark has no per-row triggers; the equivalent with identical
 *final-state* semantics (SURVEY.md §2.8/T5, §7.2) is a micro-batch
-maintenance job: for each batch of incoming source rows,
+maintenance job. For each batch of incoming source rows:
 
-  1. append the batch to the archive,
-  2. for every derived attribute whose source set intersects the
-     batch: recompute the formula at the batch's affected timestamps
-     (sibling values come from the just-updated archive, so
-     cross-batch alignment works exactly like the trigger's SELECTs),
-  3. upsert the derived rows last-wins.
+  1. read the stored rows at the batch's timestamps once (its date
+     partitions only) and overlay the batch on them, last-wins;
+  2. recompute each derived formula whose sources changed, in
+     dependency order, at the timestamps where they changed, and
+     overlay its rows so later formulas read them (the trigger
+     cascade, made explicit);
+  3. write the batch and its derived rows with ONE last-wins upsert,
+     so a batch's source rows and derived rows become visible
+     together.
 
 Visibility latency changes (micro-batch vs synchronous trigger); the
-resulting archive state is the same.
-
-Scale notes: affected timestamps per batch are bounded by batch size;
-the sibling lookup prunes archive date-partitions by the batch's dates
-before joining, so cost tracks batch span, not history size.
+resulting archive state is the same. Cost tracks batch span, not
+history size: the working set is the batch's timestamps, and the
+upsert rewrites each affected date partition once.
 """
 
 from __future__ import annotations
@@ -31,8 +33,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from industrial_data_pipeline_spark.catalog.store import ParquetStore
-from industrial_data_pipeline_spark.functions.formula import referenced_ids
+from industrial_data_pipeline_spark.catalog.store import (
+    ParquetStore,
+    merge_archive,
+)
+from industrial_data_pipeline_spark.functions.formula import (
+    dependency_order,
+    referenced_ids,
+)
 from industrial_data_pipeline_spark.operators.derived import backfill_derived
 from industrial_data_pipeline_spark.sources.ingest import RAW_SCHEMA, cleanse
 
@@ -56,64 +64,45 @@ class DerivedMaintenance:
         return {r["attribute_id"]: r["formula"] for r in rows}
 
     def process_batch(self, batch: DataFrame, epoch_id: int = 0) -> None:
-        """One micro-batch of archive-shaped source rows."""
+        """One micro-batch of archive-shaped source rows, written
+        together with every derived row it changes."""
         batch = batch.select("attribute_id", "timestamp", "value") \
             .localCheckpoint(eager=True)
         if batch.isEmpty():
             return
-        # 1. the insert itself (the reference's COPY; last-wins so a
-        #    re-sent reading updates, matching trigger-era behavior).
-        #    The returned merged frame is the MATERIALIZED post-write
-        #    content of the batch's date partitions (optimization
-        #    r15): the first derived recompute reads those local
-        #    blocks instead of re-listing + re-scanning the files
-        #    this call just wrote.
-        merged = self.store.upsert_archive(self.database, batch,
-                                           mode="last_wins")
-
         formulas = self.derived_formulas()
-        if not formulas:
-            return
         # ONE distinct collect feeds both driver-side sets
-        # (optimization r15 — previously two jobs over the same
-        # materialized batch)
         meta = (batch.select("attribute_id",
                              F.to_date("timestamp").alias("d"))
                 .distinct().collect())
-        batch_ids = {r["attribute_id"] for r in meta}
-        affected_dates = sorted({r["d"] for r in meta})
+        changed = {r["attribute_id"] for r in meta}
+        dates = sorted({r["d"] for r in meta})
 
-        for did, formula in formulas.items():
-            src_ids = referenced_ids(formula)
-            if not (set(src_ids) & batch_ids):
+        stored = None
+        out = batch  # the batch plus the derived rows computed so far
+        for did in dependency_order(formulas):
+            src_ids = referenced_ids(formulas[did])
+            if not changed & set(src_ids):
                 continue  # this batch can't change the derived value
-            affected_ts = (batch
-                           .where(F.col("attribute_id").isin(src_ids))
+            if stored is None:  # one archive read per batch
+                stored = (self.store.archive(self.database)
+                          .where(F.col("ts_date").isin(dates))
+                          .join(F.broadcast(
+                              batch.select("timestamp").distinct()),
+                              "timestamp")
+                          .select("attribute_id", "timestamp", "value")
+                          .localCheckpoint(eager=True))
+            affected_ts = (out.where(F.col("attribute_id").isin(src_ids))
                            .select("timestamp").distinct())
-            if merged is not None:
-                # the merged frame == the affected partitions'
-                # post-write content, so the FIRST formula's sibling
-                # lookup needs no store re-read
-                archive = merged
-            else:
-                # a previous formula's upsert rewrote the affected
-                # partitions via dynamic-partition overwrite, so a
-                # frame built before that write would scan a stale
-                # file listing and die with FileNotFoundException —
-                # re-list fresh per subsequent formula (also the
-                # chained-derived case: formula N+1 must see formula
-                # N's rows)
-                archive = self.store.archive(self.database).where(
-                    F.col("ts_date").isin(affected_dates))
-            src = (archive
+            src = (merge_archive(stored, out, "last_wins")
                    .where(F.col("attribute_id").isin(src_ids))
-                   .join(F.broadcast(affected_ts), "timestamp")
-                   .select("attribute_id", "timestamp", "value"))
-            rows = backfill_derived(src, did, formula)
-            # 3. trigger upsert is ON CONFLICT DO UPDATE → last-wins
-            self.store.upsert_archive(self.database, rows,
-                                      mode="last_wins")
-            merged = None  # later formulas re-read (see above)
+                   .join(F.broadcast(affected_ts), "timestamp"))
+            rows = backfill_derived(src, did, formulas[did])
+            out = merge_archive(out, rows, "last_wins") \
+                .localCheckpoint(eager=True)
+            changed.add(did)
+        # the trigger's upsert is ON CONFLICT DO UPDATE → last-wins
+        self.store.upsert_archive(self.database, out, mode="last_wins")
 
     # ------------------------------------------------------------ wiring
 

@@ -7,6 +7,7 @@ from datetime import datetime
 import pytest
 
 from industrial_data_pipeline_spark.api import Pipeline
+from industrial_data_pipeline_spark.functions.formula import FormulaError
 
 from tests.fixtures import T0, archive_rows, write_tree
 
@@ -110,6 +111,19 @@ def test_derived_attribute_lifecycle(pipe):
     # delete attribute cascade
     res = pipe.delete_attribute("plant", did)
     assert res == {"attributes_deleted": 1, "archive_records_deleted": 59}
+
+
+def test_update_rejects_indirect_formula_cycle(pipe):
+    a = pipe.insert_attribute("plant", element_id=3, name="A",
+                              formula="$2 + $3")
+    b = pipe.insert_attribute("plant", element_id=3, name="B",
+                              formula=f"${a} + 1")
+    before = sorted(map(tuple, pipe.store.attribute("plant").collect()))
+    with pytest.raises(FormulaError, match="cycle"):
+        pipe.update_attribute("plant", a, formula=f"${b} * 2")
+    # refused before any write: the catalog is unchanged
+    assert sorted(map(tuple,
+                      pipe.store.attribute("plant").collect())) == before
 
 
 def test_insert_and_delete_element_cascade(pipe):

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from industrial_data_pipeline_spark.functions.formula import (
     FormulaError,
     compile_formula,
+    dependency_order,
     emit_sql,
     referenced_ids,
     validate,
@@ -17,6 +18,22 @@ from tests.fixtures import T0, archive_rows
 
 def test_referenced_ids_order_and_dedup():
     assert referenced_ids("$7 + $8 * $7 - $9") == [7, 8, 9]
+
+
+def test_dependency_order_puts_readers_after_their_sources():
+    # 10 reads 11, which is listed after it; 12 reads only sources
+    assert dependency_order({10: "$11 * 2", 11: "$1 + $2",
+                             12: "$1"}) == [11, 12, 10]
+
+
+@pytest.mark.parametrize("formulas", [
+    {10: "$10 + 1"},                              # self-reference
+    {10: "$11 * 2", 11: "$10 + 1"},               # two-step cycle
+    {10: "$1", 11: "$13", 12: "$11", 13: "$12"},  # cycle behind a root
+])
+def test_dependency_order_rejects_cycles(formulas):
+    with pytest.raises(FormulaError, match="cycle"):
+        dependency_order(formulas)
 
 
 def test_validate_unknown_id_raises():

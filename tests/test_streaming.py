@@ -79,11 +79,9 @@ def test_streaming_end_to_end(spark, pipe, tmp_path):
 
 
 def test_two_derived_formulas_one_batch(spark, pipe):
-    """Regression: with TWO derived formulas over intersecting
-    sources, the first formula's upsert rewrites the affected
-    partitions; the second must read a FRESH archive frame — a frame
-    built before the loop scans the deleted file listing and dies
-    with FileNotFoundException."""
+    """Two derived formulas over the same sources: one batch
+    carrying both sources yields both derived values, each computed
+    from the batch's values."""
     pipe.insert_attribute("plant", element_id=3, name="DiffTP",
                           formula="$1 - $2")
     m = DerivedMaintenance(spark, pipe.store, "plant")
@@ -95,6 +93,63 @@ def test_two_derived_formulas_one_batch(spark, pipe):
     # in insert order after the sources)
     derived = sorted(v for k, v in vals.items() if k not in (1, 2))
     assert derived == [6.0, 7.0]
+
+
+def _values(pipe):
+    return {(r.attribute_id, r.timestamp): r.value
+            for r in pipe.store.archive_values("plant").collect()}
+
+
+def test_formula_over_derived_sources_only(spark, pipe):
+    """A derived attribute whose sources are all derived (B reads only
+    A) is written by the same batch that changes A's source — the
+    reference's trigger on A's derived insert."""
+    a = pipe.insert_attribute("plant", element_id=3, name="A",
+                              formula="$1 * 2")
+    b = pipe.insert_attribute("plant", element_id=3, name="B",
+                              formula=f"${a} + 1")
+    t0 = T(2025, 1, 1, 0, 0)
+    DerivedMaintenance(spark, pipe.store, "plant").process_batch(
+        _batch(spark, [(1, t0, 10.0)]))
+    vals = _values(pipe)
+    assert vals[(a, t0)] == 20.0 and vals[(b, t0)] == 21.0
+    assert (4, t0) not in vals  # AvgTP still lacks attribute 2
+
+
+def test_formula_over_later_listed_derived(spark, pipe):
+    """A formula that reads a derived attribute listed after it in the
+    catalog still sees that attribute's value from the same batch."""
+    b = pipe.insert_attribute("plant", element_id=3, name="B",
+                              formula="$1 + $2")
+    pipe.update_attribute("plant", 4, formula=f"${b} * 2")  # A = AvgTP
+    t0 = T(2025, 1, 1, 0, 0)
+    DerivedMaintenance(spark, pipe.store, "plant").process_batch(
+        _batch(spark, [(1, t0, 10.0), (2, t0, 4.0)]))
+    vals = _values(pipe)
+    assert vals[(b, t0)] == 14.0 and vals[(4, t0)] == 28.0
+
+
+def test_one_upsert_per_batch(spark, pipe, monkeypatch):
+    """A batch touching two formulas reaches the store through exactly
+    one upsert: source and derived rows become visible together."""
+    from industrial_data_pipeline_spark.catalog.store import ParquetStore
+
+    pipe.insert_attribute("plant", element_id=3, name="DiffTP",
+                          formula="$1 - $2")
+    calls = []
+    upsert = ParquetStore.upsert_archive
+
+    def counting(self, *args, **kwargs):
+        calls.append(args)
+        return upsert(self, *args, **kwargs)
+
+    monkeypatch.setattr(ParquetStore, "upsert_archive", counting)
+    t0 = T(2025, 1, 1, 0, 0)
+    DerivedMaintenance(spark, pipe.store, "plant").process_batch(
+        _batch(spark, [(1, t0, 10.0), (2, t0, 4.0)]))
+    assert len(calls) == 1
+    assert sorted(v for (k, _), v in _values(pipe).items()
+                  if k not in (1, 2)) == [6.0, 7.0]
 
 
 def test_session_merge_never_regresses_open_end():
